@@ -27,7 +27,6 @@ import scala.jdk.CollectionConverters._
 object Bench {
 
   private def sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-  private def cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
   /** Machine-load sentinel (round 9): raw seconds from a shared box
     * drift ±20% (occasionally 2×) with co-located load, so the README
@@ -151,7 +150,7 @@ object Bench {
     * best-of-2 per query (passes are full sweeps, not back-to-back
     * repeats, so a transient load spike decorrelates from a query). */
   private def childMain(outPath: String): Unit = {
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     val names = selectedNames
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     names.foreach { n =>
@@ -198,7 +197,7 @@ object Bench {
     * quick dev iteration on small subsets where fork overhead dwarfs
     * the measurement. Not the graded path. */
   private def inProcessMain(): Unit = {
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     val names = selectedNames
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     names.foreach { n =>

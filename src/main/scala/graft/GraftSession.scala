@@ -54,8 +54,14 @@ object GraftSession {
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .withExtensions(GraftExtensions.install)
 
-  /** Local session sized like the harness (local[32], 32 shuffle parts). */
-  def local(cores: Int = 32): SparkSession = {
+  /** Default core count for every local session and tool: the
+    * `SPARK_GRAFT_CPUS` environment variable, else the host's available
+    * processors, so an unset variable sizes runs to the host. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Local session with `cores` task slots and as many shuffle parts. */
+  def local(cores: Int = cpus): SparkSession = {
     val s = builder(cores, cores).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     tune(s)

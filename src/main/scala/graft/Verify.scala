@@ -12,8 +12,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // Dev aid: SPARK_GRAFT_ONLY=q1_agg,q3_topk limits the run (driver unset).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

@@ -194,21 +194,17 @@ object Dedup {
   }
 
   private def docsWithTokens(s: SparkSession, dir: String): DataFrame =
-    // The test-SF documents parquet is a single row group => the scan is
-    // ONE task, which would serialize the md5-per-token hash stage below.
     // Spread the (tiny) raw docs across the executors before the
-    // CPU-bound projection; at production scale files arrive in many row
-    // groups and this shuffle stays proportionally negligible (docs are
-    // re-shuffled once, before the fan-out to signature consumers).
-    Tables.load(s, dir, "documents")
+    // CPU-bound md5-per-token hash stage (CandidateVerify.spread); docs
+    // are re-shuffled once, before the fan-out to signature consumers.
+    CandidateVerify.spread(Tables.load(s, dir, "documents")
       // NULL-text guard: the outer-explode sites downstream (used for
       // the inferred-generator-filter fix) would turn a NULL text row
       // into a NULL-token row, where DuckDB's unnest(NULL) emits
       // nothing. Dropping NULL text at load (a pushed IsNotNull scan
       // filter, free) makes every outer explode provably row-identical
       // to the inner form on any corpus.
-      .filter(col("text").isNotNull)
-      .repartition(s.sparkContext.defaultParallelism)
+      .filter(col("text").isNotNull))
       .withColumn("toks", split(col("text"), " "))
 
   /** Per-ROW (tset, sig) pair for stream-side/indexed probes: the same
@@ -288,23 +284,40 @@ object Dedup {
     val a = rare.select(col("doc_id").as("da"), col("source"), col("h"))
     val b = rare.select(col("doc_id").as("db"), col("source").as("sb"),
       col("h").as("hb"))
-    val cand = spreadByKeys(
-      a.join(b, col("source") === col("sb") &&
-          col("h") === col("hb") && col("da") < col("db"))
-        .select(col("da"), col("db")),
-      Seq("da", "db")).dropDuplicates()
-    val sets = base.select(col("doc_id"), col("shs"))
-    cand
-      .join(sets.select(col("doc_id").as("da"), col("shs").as("sa")), "da")
-      .join(sets.select(col("doc_id").as("db"), col("shs").as("sb2")), "db")
-      .withColumn("inter",
-        call_function("inter_count", col("sa"), col("sb2")))
-      .withColumn("jac", col("inter").cast("double") /
-        ((size(col("sa")) + size(col("sb2"))).cast("long") - col("inter")))
+    val cand = CandidateVerify.pairs(a.join(b,
+      col("source") === col("sb") && col("h") === col("hb") &&
+        col("da") < col("db")))
+    CandidateVerify.verify(cand, base.select(col("doc_id"), col("shs")))
       .filter(col("jac") >= 0.5)
       .select(col("da"), col("db"), col("jac"))
       .orderBy(col("jac").desc, col("da"), col("db"))
       .limit(100)
+  }
+
+  /** Shared PPJoin prefix machinery: (base = per-doc distinct token
+    * set, pref = exploded df-ranked prefixes with 0-based positions).
+    * Used by the d19 miner and the d22 filter audit. */
+  private def prefixTables(docs: DataFrame): (DataFrame, DataFrame) = {
+    val base = docs
+      .select(col("doc_id"), col("source"),
+        array_distinct(tokHashes(col("text"))).as("tset"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ex = base.select(col("doc_id"), col("source"),
+      explode(col("tset")).as("h"))
+    val dfreq = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
+    val ranked = ex.join(dfreq, "h")
+      .groupBy(col("doc_id"), col("source"))
+      .agg(sort_array(collect_list(struct(col("df"), col("h"))))
+          .as("ord"),
+        count(lit(1)).as("sz"))
+    // Column `/` is double division — `div` keeps it exact-integer.
+    val prefLen = expr("CAST(sz - ((sz * 7 + 9) div 10) + 1 AS INT)")
+    val pref = ranked
+      .select(col("doc_id"), col("source"), col("sz"),
+        posexplode(slice(col("ord"), lit(1), prefLen)).as(Seq("pos", "p")))
+      .select(col("doc_id"), col("source"), col("sz"),
+        col("pos"), col("p.h").as("h"))
+    (base, pref)
   }
 
   /** PREFIX-FILTERING set-similarity join (the PPJoin family) — d19's
@@ -330,51 +343,6 @@ object Dedup {
     * the shuffle. Pair shuffle carries only (da, db); full sets
     * re-attach by equi-join for exact verification, the d03 discipline.
     * Input needs (doc_id, source, text). */
-  /** Shared PPJoin prefix machinery: (base = per-doc distinct token
-    * set, pref = exploded df-ranked prefixes with 0-based positions).
-    * Used by the d19 miner and the d22 filter audit. */
-  /** Hash-exchange `df` on `keys` with an explicitly pinned partition
-    * count (the session's defaultParallelism). The candidate-pair
-    * distinct/fold that follows is byte-tiny ((da, db) int64 pairs) but
-    * the verify stage downstream of it is CPU-dense per byte
-    * (inter_count over ~KB token-set arrays per pair), and AQE's
-    * byte-based coalescing (parallelismFirst respects only the 1 MB
-    * minPartitionSize) collapses it to 1-4 tasks — measured 41% of d22
-    * and 7-10% of d03/d19 serialized on one core. A user repartition
-    * with explicit numPartitions is exempt from AQE coalescing, and
-    * keying it on the distinct/groupBy keys means the aggregate reuses
-    * this exchange — same exchange COUNT as the plain distinct, pinned
-    * width. Scale note: N tracks the session's core count, so a cluster
-    * run pins the same order of parallelism its shuffle.partitions
-    * would give; the verify join-attach exchanges after it are sized by
-    * AQE from real bytes as before. */
-  private def spreadByKeys(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism,
-      keys.map(col): _*)
-
-  private def prefixTables(docs: DataFrame): (DataFrame, DataFrame) = {
-    val base = docs
-      .select(col("doc_id"), col("source"),
-        array_distinct(tokHashes(col("text"))).as("tset"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val ex = base.select(col("doc_id"), col("source"),
-      explode(col("tset")).as("h"))
-    val dfreq = ex.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val ranked = ex.join(dfreq, "h")
-      .groupBy(col("doc_id"), col("source"))
-      .agg(sort_array(collect_list(struct(col("df"), col("h"))))
-          .as("ord"),
-        count(lit(1)).as("sz"))
-    // Column `/` is double division — `div` keeps it exact-integer.
-    val prefLen = expr("CAST(sz - ((sz * 7 + 9) div 10) + 1 AS INT)")
-    val pref = ranked
-      .select(col("doc_id"), col("source"), col("sz"),
-        posexplode(slice(col("ord"), lit(1), prefLen)).as(Seq("pos", "p")))
-      .select(col("doc_id"), col("source"), col("sz"),
-        col("pos"), col("p.h").as("h"))
-    (base, pref)
-  }
-
   private[graft] def prefixFilterPairsOn(docs: DataFrame): DataFrame = {
     val t = 0.7
     val (base, pref) = prefixTables(docs)
@@ -396,24 +364,13 @@ object Dedup {
     // shuffle shrinks too.
     val obound = least(col("pa"), col("pb")) + lit(1) +
       least(col("sza") - col("pa") - 1, col("szb") - col("pb") - 1)
-    val cand = spreadByKeys(
-      a.join(b, col("source") === col("sb") &&
-          col("h") === col("hb") && col("da") < col("db") &&
-          col("sza") * 7 <= col("szb") * 10 &&
-          col("szb") * 7 <= col("sza") * 10 &&
-          obound * 17 >= (col("sza") + col("szb")) * 7)
-        .select(col("da"), col("db")),
-      Seq("da", "db")).dropDuplicates()
-    val sets = base.select(col("doc_id"), col("tset"))
-    cand
-      .join(sets.select(col("doc_id").as("da"), col("tset").as("ta")),
-        "da")
-      .join(sets.select(col("doc_id").as("db"), col("tset").as("tb")),
-        "db")
-      .withColumn("inter",
-        call_function("inter_count", col("ta"), col("tb")))
-      .withColumn("jac", col("inter").cast("double") /
-        ((size(col("ta")) + size(col("tb"))).cast("long") - col("inter")))
+    val cand = CandidateVerify.pairs(a.join(b,
+      col("source") === col("sb") && col("h") === col("hb") &&
+        col("da") < col("db") &&
+        col("sza") * 7 <= col("szb") * 10 &&
+        col("szb") * 7 <= col("sza") * 10 &&
+        obound * 17 >= (col("sza") + col("szb")) * 7))
+    CandidateVerify.verify(cand, base.select(col("doc_id"), col("tset")))
       .filter(col("jac") >= t)
       .select(col("da"), col("db"), col("jac"))
       .orderBy(col("da"), col("db"))
@@ -481,14 +438,8 @@ object Dedup {
     * base. */
   private[graft] def ensureIngestIndexWhere(s: SparkSession, dir: String,
                                             tag: String, pred: Column): String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    // `-v2`: round-13 artifact schema (bands carry the build-time bucket
-    // population + a bucket-grain `pops` table) — the suffix retires
-    // pre-pop artifacts that would otherwise pass the manifest check and
-    // fail the probe's pop-column read.
-    val base = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft_ingest_index/${IndexStore.fingerprint(src)}-$tag-v2")
+    val base = IndexStore.base(IndexStore.Ingest,
+      new java.io.File(s"$dir/documents.parquet"), s"-$tag")
     IndexStore.ensureBuilt(base) { tmp =>
       val sig = lshSigDf(s, dir).filter(pred)
       // The artifact's row contract is "one row per (doc, band)": docs
@@ -580,11 +531,9 @@ object Dedup {
   private[graft] def compactIndexSegments(s: SparkSession, dir: String,
                                           tag: String,
                                           segs: Seq[String]): String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val base = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft_ingest_index/${IndexStore.fingerprint(src)}-$tag-" +
-        s"${segDigest(segs.map(new java.io.File(_).getName))}-v2")
+    val base = IndexStore.base(IndexStore.Ingest,
+      new java.io.File(s"$dir/documents.parquet"),
+      s"-$tag-${segDigest(segs.map(new java.io.File(_).getName))}")
     IndexStore.ensureBuilt(base) { tmp =>
       val popsPath = new java.io.File(tmp, "pops").getPath
       // One deduplicated union of band rows feeds BOTH outputs: the
@@ -676,10 +625,8 @@ object Dedup {
     * published atomically. d06 itself stays the graded from-scratch
     * path — it IS the build. Returns the index directory. */
   private def ensureClusterIndex(s: SparkSession, dir: String): String = {
-    val src = new java.io.File(s"$dir/documents.parquet")
-    val base = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"graft_cluster_index/${IndexStore.fingerprint(src)}")
+    val base = IndexStore.base(IndexStore.Cluster,
+      new java.io.File(s"$dir/documents.parquet"))
     IndexStore.ensureBuilt(base) { tmp =>
       // d06's exact chain, inlined so the mined PAIRS publish alongside
       // the converged labels (round-12: d25's leak audit probes pairs at
@@ -751,19 +698,10 @@ object Dedup {
     // table means the probe joins only buckets a bounded population
     // lives in — candidate volume stays ∝ |batch|·cap instead of
     // |batch|·(N/buckets), and the cap cost was paid at index BUILD.
-    val cand = spreadByKeys(
-      bb.join(bands,
-          col("band") === col("bandb") && col("mh") === col("mhb"))
-        .select(col("da"), col("db")),
-      Seq("da", "db")).dropDuplicates()
-    val verified = cand
-      .join(bsig.select(col("doc_id").as("da"), col("tset").as("ta")),
-        "da")
-      .join(tsets, "db")
-      .withColumn("inter",
-        call_function("inter_count", col("ta"), col("tb")))
-      .withColumn("jac", col("inter").cast("double") /
-        ((size(col("ta")) + size(col("tb"))).cast("long") - col("inter")))
+    val cand = CandidateVerify.pairs(bb.join(bands,
+      col("band") === col("bandb") && col("mh") === col("mhb")))
+    val verified = CandidateVerify.verify(cand,
+        bsig.select(col("doc_id").as("da"), col("tset").as("ta")), tsets)
       .groupBy(col("da"))
       .agg(count(lit(1)).as("n_candidates"),
         sum(when(col("jac") >= 0.7, 1L).otherwise(0L)).as("n_near"),
@@ -778,16 +716,6 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** d03's band-bucket pair miner over a [[lshSigDf]]: candidates share
-    * ≥1 MinHash value within a source partition, verified with true
-    * token-set Jaccard ≥ 0.7. Bucket-join, never all-pairs.
-    *
-    * REQUIRES a persisted `sig` (checked below, not remembered): the
-    * signature fans out into THREE consumers here (the band explode and
-    * both token-set re-attach joins), so an unpersisted input would
-    * re-hash the corpus 3×; and the plain `posexplode` is only safe
-    * from the inferred-generator-filter re-run trap because the explode
-    * reads cached rows, not the parquet scan. */
   /** Population cap for LSH band buckets (round-12, found at the sf10
     * leg): candidate volume through a bucket is population², so bucket
     * populations that grow with N make every band join QUADRATIC — at
@@ -856,6 +784,16 @@ object Dedup {
       capBuckets(bands, Seq("bandb", "mhb"))
     }
 
+  /** d03's band-bucket pair miner over a [[lshSigDf]]: candidates share
+    * ≥1 MinHash value within a source partition, verified with true
+    * token-set Jaccard ≥ 0.7. Bucket-join, never all-pairs.
+    *
+    * REQUIRES a persisted `sig` (checked below, not remembered): the
+    * signature fans out into THREE consumers here (the band explode and
+    * both token-set re-attach joins), so an unpersisted input would
+    * re-hash the corpus 3×; and the plain `posexplode` is only safe
+    * from the inferred-generator-filter re-run trap because the explode
+    * reads cached rows, not the parquet scan. */
   private def lshPairsFrom(sig: DataFrame): DataFrame = {
     require(sig.storageLevel != StorageLevel.NONE,
       "lshPairsFrom requires a persisted signature input: it fans the " +
@@ -868,27 +806,10 @@ object Dedup {
       col("band"), col("mh"))
     val b = bands.select(col("doc_id").as("db"), col("source").as("sb"),
       col("band").as("bandb"), col("mh").as("mhb"))
-    val cand = spreadByKeys(
-      a.join(b,
-          col("source") === col("sb") && col("band") === col("bandb") &&
-          col("mh") === col("mhb") && col("da") < col("db"))
-        .select(col("da"), col("db")),
-      Seq("da", "db")).dropDuplicates()
-    val tsets = sig.select(col("doc_id"), col("tset"))
-    cand
-      .join(tsets.select(col("doc_id").as("da"), col("tset").as("ta")),
-        "da")
-      .join(tsets.select(col("doc_id").as("db"), col("tset").as("tb")),
-        "db")
-      // inter_count == size(array_intersect(...)) without materializing
-      // the intersection array or ArrayIntersect's boxed hash set —
-      // this is the per-candidate-pair cost of every verify stage
-      // (round 16, guide §4; functions/IntersectCount).
-      .withColumn("inter",
-        call_function("inter_count", col("ta"), col("tb")))
-      .withColumn("uni",
-        (size(col("ta")) + size(col("tb"))).cast("long") - col("inter"))
-      .withColumn("jac", col("inter").cast("double") / col("uni"))
+    val cand = CandidateVerify.pairs(a.join(b,
+      col("source") === col("sb") && col("band") === col("bandb") &&
+        col("mh") === col("mhb") && col("da") < col("db")))
+    CandidateVerify.verify(cand, sig.select(col("doc_id"), col("tset")))
       .filter(col("jac") >= 0.7)
       .select(col("da"), col("db"), col("jac"))
   }
@@ -1189,9 +1110,8 @@ object Dedup {
       pairs.join(a, "da").join(b, "db")
         .withColumn("sh_inter",
           call_function("inter_count", col("sa"), col("sb")))
-        .withColumn("sh_jac", col("sh_inter").cast("double") /
-          ((size(col("sa")) + size(col("sb"))).cast("long")
-            - col("sh_inter")))
+        .withColumn("sh_jac", CandidateVerify.jaccard(col("sh_inter"),
+          col("sa"), col("sb")))
         .withColumn("hamming",
           bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
         .select(col("da"), col("db"), col("jac"), col("sh_jac"),
@@ -1228,22 +1148,10 @@ object Dedup {
           col("band"), col("bkey"))
         val bb = k.select(col("doc_id").as("db"), col("source").as("sb"),
           col("band").as("bandb"), col("bkey").as("bkeyb"))
-        val cand = spreadByKeys(
-          a.join(bb, col("source") === col("sb") &&
-              col("band") === col("bandb") && col("bkey") === col("bkeyb") &&
-              col("da") < col("db"))
-            .select(col("da"), col("db")),
-          Seq("da", "db")).dropDuplicates()
-        cand
-          .join(tsets.select(col("doc_id").as("da"), col("tset").as("ta")),
-            "da")
-          .join(tsets.select(col("doc_id").as("db"), col("tset").as("tb")),
-            "db")
-          .withColumn("inter",
-            call_function("inter_count", col("ta"), col("tb")))
-          .withColumn("jac", col("inter").cast("double") /
-            ((size(col("ta")) + size(col("tb"))).cast("long")
-              - col("inter")))
+        val cand = CandidateVerify.pairs(a.join(bb,
+          col("source") === col("sb") && col("band") === col("bandb") &&
+            col("bkey") === col("bkeyb") && col("da") < col("db")))
+        CandidateVerify.verify(cand, tsets)
           .agg(count(lit(1)).as("n_cand"),
             sum(when(col("jac") >= 0.7, 1L).otherwise(0L)).as("n_true"))
           .select(lit(s"b${b}r$r").as("config"),
@@ -1280,8 +1188,7 @@ object Dedup {
       // parquet is a single row group — without the spread, one task
       // does the whole corpus's md5 work (the docsWithTokens note; this
       // was a 10× bench regression when first landed).
-      cdcDedup(Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism))
+      cdcDedup(CandidateVerify.spread(Tables.load(s, dir, "documents")))
     },
 
     "d19_prefix_filter_pairs" -> { (s, dir) =>
@@ -1324,21 +1231,10 @@ object Dedup {
       val cb = capBuckets(bands.filter(!isNew)
         .select(col("doc_id").as("db"), col("band").as("bandb"),
           col("mh").as("mhb")), Seq("bandb", "mhb"))
-      val cand = spreadByKeys(
-        bb.join(cb,
-            col("band") === col("bandb") && col("mh") === col("mhb"))
-          .select(col("da"), col("db")),
-        Seq("da", "db")).dropDuplicates()
-      val tsets = sig.select(col("doc_id"), col("tset"))
-      val verified = cand
-        .join(tsets.select(col("doc_id").as("da"), col("tset").as("ta")),
-          "da")
-        .join(tsets.select(col("doc_id").as("db"), col("tset").as("tb")),
-          "db")
-        .withColumn("inter",
-          call_function("inter_count", col("ta"), col("tb")))
-        .withColumn("jac", col("inter").cast("double") /
-          ((size(col("ta")) + size(col("tb"))).cast("long") - col("inter")))
+      val cand = CandidateVerify.pairs(bb.join(cb,
+        col("band") === col("bandb") && col("mh") === col("mhb")))
+      val verified = CandidateVerify.verify(cand,
+          sig.select(col("doc_id"), col("tset")))
         .groupBy(col("da"))
         .agg(count(lit(1)).as("n_candidates"),
           sum(when(col("jac") >= 0.7, 1L).otherwise(0L)).as("n_near"),
@@ -1611,26 +1507,17 @@ object Dedup {
       val obound = least(col("pa"), col("pb")) + lit(1) +
         least(col("sza") - col("pa") - 1, col("szb") - col("pb") - 1)
       val posOk = lenOk && obound * 17 >= (col("sza") + col("szb")) * 7
-      val pairs = spreadByKeys(
+      val pairs = CandidateVerify.spread(
         a.join(b, col("source") === col("sb") &&
             col("h") === col("hb") && col("da") < col("db"))
           .select(col("source"), col("da"), col("db"),
             when(lenOk, 1L).otherwise(0L).as("len_ok"),
             when(posOk, 1L).otherwise(0L).as("pos_ok")),
-        Seq("source", "da", "db"))
+        "source", "da", "db")
         .groupBy(col("source"), col("da"), col("db"))
         .agg(max(col("len_ok")).as("len_ok"),
           max(col("pos_ok")).as("pos_ok"))
-      val tsets = base.select(col("doc_id"), col("tset"))
-      pairs
-        .join(tsets.select(col("doc_id").as("da"), col("tset").as("ta")),
-          "da")
-        .join(tsets.select(col("doc_id").as("db"), col("tset").as("tb")),
-          "db")
-        .withColumn("inter",
-          call_function("inter_count", col("ta"), col("tb")))
-        .withColumn("jac", col("inter").cast("double") /
-          ((size(col("ta")) + size(col("tb"))).cast("long") - col("inter")))
+      CandidateVerify.verify(pairs, base.select(col("doc_id"), col("tset")))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_cand_prefix"),
           sum(col("len_ok")).as("n_cand_len"),
@@ -2142,20 +2029,11 @@ object Dedup {
       val tsets = seg("tsets", Seq("db", "tb"))
       val bb = bsig.select(col("doc_id").as("da"),
         posexplode_outer(col("sig")).as(Seq("band", "mh")))
-      val cand = spreadByKeys(
-        bb.join(bands,
-            col("band") === col("bandb") && col("mh") === col("mhb"))
-          .select(col("da"), col("db")),
-        Seq("da", "db")).dropDuplicates()
-      val verified = cand
-        .join(bsig.select(col("doc_id").as("da"), col("tset").as("ta")),
-          "da")
-        .join(tsets, "db") // brings tb AND the segment tag (db-unique)
-        .withColumn("inter",
-          call_function("inter_count", col("ta"), col("tb")))
-        .withColumn("jac", col("inter").cast("double") /
-          ((size(col("ta")) + size(col("tb"))).cast("long") -
-            col("inter")))
+      val cand = CandidateVerify.pairs(bb.join(bands,
+        col("band") === col("bandb") && col("mh") === col("mhb")))
+      // tsets brings tb AND the segment tag (db-unique).
+      val verified = CandidateVerify.verify(cand,
+          bsig.select(col("doc_id").as("da"), col("tset").as("ta")), tsets)
         .groupBy(col("da"))
         .agg(count(lit(1)).as("n_candidates"),
           sum(when(col("jac") >= 0.7, 1L).otherwise(0L)).as("n_near"),
@@ -2467,16 +2345,12 @@ object Dedup {
       // bounded — no two-countDistinct RewriteDistinctAggregates
       // nondeterminism (the verify-skill gotcha).
       val ks = Seq(8, 16, 32)
-      val docs = Tables.load(s, dir, "documents")
-        .filter(col("text").isNotNull)
-        // docsWithTokens' spread rule (round 16, found by StageProfile):
-        // the single-row-group test parquet makes the scan ONE task, and
-        // the heaviest stage of this query — ~3 window-md5s per token
-        // across all three grains — ran serialized on one core (3.2 s of
-        // a 10 s plan, 31 threads idle). One shuffle of the tiny raw
-        // docs parallelizes it; at production scale the file count makes
-        // the spread proportionally free.
-        .repartition(s.sparkContext.defaultParallelism)
+      // CandidateVerify.spread (round 16, found by StageProfile): the
+      // heaviest stage of this query — ~3 window-md5s per token across
+      // all three grains — ran serialized on one core without it (3.2 s
+      // of a 10 s plan, 31 threads idle).
+      val docs = CandidateVerify.spread(Tables.load(s, dir, "documents")
+          .filter(col("text").isNotNull))
         .select(col("doc_id"), col("source"), col("text"))
       // All three grains from three fused shingle_hashes passes
       // (round 16, guide §4 — the dupSpansPerDoc rewrite): byte-span
@@ -2588,27 +2462,16 @@ object Dedup {
         .select(col("da"), col("sza"), col("p.h").as("h"))
       val post = ex.select(col("doc_id").as("db"), col("sz").as("szb"),
         col("h").as("hb"))
-      val cand = spreadByKeys(
-        pref.join(post, col("h") === col("hb") &&
-            (col("sza") < col("szb") ||
-              (col("sza") === col("szb") && col("da") < col("db"))))
-          .select(col("da"), col("db")),
-        Seq("da", "db")).dropDuplicates()
+      val cand = CandidateVerify.pairs(pref.join(post,
+        col("h") === col("hb") && (col("sza") < col("szb") ||
+          (col("sza") === col("szb") && col("da") < col("db")))))
       val full = base.select(col("doc_id"), col("shs"))
-      cand
-        .join(full.select(col("doc_id").as("da"), col("shs").as("sa")),
-          "da")
-        .join(full.select(col("doc_id").as("db"), col("shs").as("sb")),
-          "db")
-        // Round 17: every feeder is array<bigint> now (d39's shingle
-        // hashes since round 16; d40/d41's block hashes converted from
-        // md5-hex strings to the 60-bit fold this round), so the
-        // verify stage uses the codegen'd inter_count like the rest of
-        // the dedup family (guide §4).
-        .withColumn("inter",
-          call_function("inter_count", col("sa"), col("sb")))
-        .withColumn("sz_small", size(col("sa")).cast("long"))
-        .withColumn("sz_big", size(col("sb")).cast("long"))
+      // Every feeder is array<bigint> (d39's shingle hashes, d40/d41's
+      // 60-bit block-hash fold), so the verify stage is the shared
+      // codegen'd inter_count; containment keeps its own size columns.
+      CandidateVerify.attach(cand, full.toDF("da", "ta"), full.toDF("db", "tb"))
+        .withColumn("sz_small", size(col("ta")).cast("long"))
+        .withColumn("sz_big", size(col("tb")).cast("long"))
         .filter(col("inter") * den >= col("sz_small") * num)
         .withColumn("cont", col("inter").cast("double") /
           col("sz_small").cast("double"))

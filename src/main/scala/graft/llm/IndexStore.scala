@@ -29,6 +29,39 @@ import scala.jdk.CollectionConverters._
   */
 private[graft] object IndexStore {
 
+  /** Artifact families: one directory per family under java.io.tmpdir. */
+  val Postings = "graft_postings_index"
+  val Ingest = "graft_ingest_index"
+  val Cluster = "graft_cluster_index"
+  val Ann = "graft_ann_index"
+  val AnnDelta = "graft_ann_dindex"
+
+  /** Each family's artifact-format tag, the last part of every artifact
+    * name: a layout change bumps the tag, so a probe can never read an
+    * artifact of an older layout that would still pass the manifest
+    * check.
+    *  - `-v2` postings: range-clustered across defaultParallelism files
+    *    instead of one global-sorted file (round 17);
+    *  - `-v2` ingest: bands carry the build-time bucket population plus
+    *    a bucket-grain `pops` table (round 13);
+    *  - `-t2f` ann_index: cells are two-level-routed (round 15) with the
+    *    empty-group flat fallback (round 16), so a pre-fallback artifact
+    *    (which could have silently dropped vectors) never serves a probe
+    *    whose oracle recomputes the fallback-complete cells;
+    *  - `-e1t2f` ann_dindex: cells carry the float embedding (round 12)
+    *    and the same two-level route. */
+  private val Format = Map(Postings -> "-v2", Ingest -> "-v2",
+    Ann -> "-t2f", AnnDelta -> "-e1t2f")
+
+  /** The artifact directory
+    * `java.io.tmpdir/<family>/<fingerprint(src)><suffix><format tag>` —
+    * the one place artifact names are built, for writers and readers
+    * alike. `suffix` distinguishes artifacts of one corpus within a
+    * family (e.g. `-base`, `-delta`, a compaction's segment digest). */
+  def base(family: String, src: File, suffix: String = ""): File =
+    new File(sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+      s"$family/${fingerprint(src)}$suffix${Format.getOrElse(family, "")}")
+
   /** 16-hex content fingerprint of a parquet source file or directory:
     * md5 over canonical path + recursive child (name, length, mtime). */
   def fingerprint(src: File): String = {

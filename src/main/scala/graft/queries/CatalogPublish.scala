@@ -26,12 +26,8 @@ import graft.llm.IndexStore
 private[graft] object CatalogPublish {
 
   private def published(src: File, family: String)
-                       (build: File => Unit): String = {
-    val base = new File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-      s"$family/${IndexStore.fingerprint(src)}")
-    IndexStore.ensureBuilt(base)(build)
-  }
+                       (build: File => Unit): String =
+    IndexStore.ensureBuilt(IndexStore.base(family, src))(build)
 
   /** Bucketed table: the build writes through a uniquely-named temp
     * catalog entry (bucketBy requires saveAsTable — the bucket ids are

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.llm.CandidateVerify.jaccard
+
 /** Structured-Streaming surface. The reference is a bounded-only engine
   * (SURVEY.md §1 — no watermarks, no stateful ops), so this module is
   * EXTENSION surface, not parity: the streaming shapes a training-data
@@ -150,8 +152,7 @@ object StreamOps {
       .join(corpusTsets, Seq("db"), "left_outer")
       .withColumn("inter",
         call_function("inter_count", col("ta"), col("tb")))
-      .withColumn("jac", col("inter").cast("double") /
-        ((size(col("ta")) + size(col("tb"))).cast("long") - col("inter")))
+      .withColumn("jac", jaccard(col("inter"), col("ta"), col("tb")))
     probed
       .groupBy(window(col("ts"), windowLen), col("doc_id"),
         col("exact_dup"))
@@ -760,9 +761,7 @@ object StreamOps {
         call_function("inter_count", col("ta"), col("tb")))
       .select(col("doc_id"), col("ts"), nl("bloom_pass", "long"),
         nl("exact_dup", "long"), col("db"),
-        (col("inter").cast("double") /
-          ((size(col("ta")) + size(col("tb"))).cast("long") -
-            col("inter"))).as("jac"),
+        jaccard(col("inter"), col("ta"), col("tb")).as("jac"),
         col("seg").as("lseg"),
         nl("ann",
           "struct<nsim:double,c_id:bigint,sim:double,seg:string>"))

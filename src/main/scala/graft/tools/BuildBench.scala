@@ -3,6 +3,8 @@ package graft.tools
 import java.io.File
 import java.nio.file.{Files, Paths}
 
+import graft.llm.IndexStore
+
 /** INDEX BUILD-COST bench (round 16, verdict #2) — the committed
   * artifact for the one cost class every per-query bench deliberately
   * hides: Bench's warmup pass builds the materialized indexes so the
@@ -32,16 +34,15 @@ import java.nio.file.{Files, Paths}
   * and the artifact records head_commit/src_dirty so BuildPinSpec can
   * enforce the same freshness rule as the query pin.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.BuildBench [sfDir]"
+  * Usage: sbt "runMain graft.tools.BuildBench [sfDir]"
   */
 object BuildBench {
 
-  private def purge(roots: Seq[String], marker: String = ""): Unit = {
+  /** Delete every artifact of the given IndexStore families. */
+  private def purge(families: Seq[String]): Unit = {
     val tmp = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    roots.foreach { r =>
-      val root = new File(tmp, r)
-      Option(root.listFiles()).getOrElse(Array.empty[File])
-        .filter(d => marker.isEmpty || d.getName.contains(marker))
+    families.foreach { r =>
+      Option(new File(tmp, r).listFiles()).getOrElse(Array.empty[File])
         .foreach(deleteRec)
     }
   }
@@ -53,8 +54,7 @@ object BuildBench {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.GraftSession.local(cpus)
+    val spark = graft.GraftSession.local()
 
     def runQ(name: String): Double = {
       spark.catalog.clearCache()
@@ -71,14 +71,14 @@ object BuildBench {
     val sentPre = sentinel()
 
     // ANN family: cold lifecycle (each row builds only its stage).
-    purge(Seq("graft_ann_index", "graft_ann_dindex"))
+    purge(Seq(IndexStore.Ann, IndexStore.AnnDelta))
     val annRows = Seq("v18_indexed_ann", "v19_delta_ann",
       "v19b_ann_compaction")
     val annCold = annRows.map(n => n -> runQ(n)).toMap
     val annWarm = annRows.map(n => n -> runQ(n)).toMap
 
     // Text family: same discipline over the ingest index root.
-    purge(Seq("graft_ingest_index"))
+    purge(Seq(IndexStore.Ingest))
     val txtRows = Seq("d21_indexed_ingest", "d23_index_delta_append",
       "d43_index_compaction")
     val txtCold = txtRows.map(n => n -> runQ(n)).toMap

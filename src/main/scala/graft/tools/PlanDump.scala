@@ -21,8 +21,7 @@ object PlanDump {
       if (rest.length > 1) rest.tail.toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.GraftSession.local(cpus)
+    val spark = graft.GraftSession.local()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       try {

@@ -37,8 +37,7 @@ object ScaleUp {
     // previous decade's full key span or replicas collide — pass 1e10
     // when scaling target/sf1.
     val Shift = if (args.length > 3) args(3).toLong else 1000000000L
-    val spark = GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = GraftSession.local()
 
     def replicate(name: String, f: (DataFrame, Int) => DataFrame): Unit = {
       val base = Tables.load(spark, src, name)

@@ -35,8 +35,7 @@ object ShuffleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = GraftSession.local(cpus)
+    val spark = GraftSession.local()
     try run(spark, sfDir) finally spark.stop()
   }
 

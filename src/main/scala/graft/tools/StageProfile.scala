@@ -15,8 +15,7 @@ import scala.collection.mutable.ArrayBuffer
 object StageProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.GraftSession.local(cpus)
+    val spark = graft.GraftSession.local()
 
     case class St(id: Int, name: String, tasks: Int, wallMs: Long,
                   runMs: Long, cpuMs: Long, shRead: Long, shWrite: Long,

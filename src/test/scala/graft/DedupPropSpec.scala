@@ -213,8 +213,6 @@ class DedupPropSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"compacted-index probe diverged from monolithic index " +
         s"(${compacted.size} vs ${mono.size} rows)")
     val fp = new java.io.File(s"$dir/documents.parquet")
-    val tmpdir = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    val key = graft.llm.IndexStore.fingerprint(fp)
     // d43's exact segment set, re-derived here to address the compacted
     // artifact (round-15: the compaction cache key mixes in the segment
     // identities, so same-tag-different-segments can never alias).
@@ -228,8 +226,8 @@ class DedupPropSpec extends AnyFunSuite with BeforeAndAfterAll {
     def partAt(dirPath: String, p: String) = spark.read
       .parquet(s"$dirPath/$p")
       .collect().map(_.toString).sorted.toSeq
-    def part(tag: String, p: String) =
-      partAt(s"$tmpdir/graft_ingest_index/$key-$tag-v2", p)
+    def part(tag: String, p: String) = partAt(graft.llm.IndexStore
+      .base(graft.llm.IndexStore.Ingest, fp, s"-$tag").getPath, p)
     for (p <- Seq("bands", "pops", "tsets", "hashes")) {
       val (cmp, full) = (partAt(cmpDir, p), part("full", p))
       assert(cmp.nonEmpty && cmp == full,
@@ -264,11 +262,9 @@ class DedupPropSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = "/root/testdata/sf0.001"
     // d07's construction forces the build-if-missing.
     Dedup.queries("d07_keep_best")(spark, dir).collect()
-    val key = graft.llm.IndexStore.fingerprint(
+    val cidx = graft.llm.IndexStore.base(graft.llm.IndexStore.Cluster,
       new java.io.File(s"$dir/documents.parquet"))
-    val tmpdir = sys.props.getOrElse("java.io.tmpdir", "/tmp")
-    val idx = spark.read
-      .parquet(s"$tmpdir/graft_cluster_index/$key/labels")
+    val idx = spark.read.parquet(s"$cidx/labels")
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val fresh = Dedup.queries("d06_dup_clusters")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
@@ -300,6 +296,12 @@ class DedupPropSpec extends AnyFunSuite with BeforeAndAfterAll {
         "no speedup on the diameter-bound case")
     assert(plainRounds >= n - 2, s"plain propagation finished in " +
       s"$plainRounds rounds — the chain case is not exercising diameter")
+    // maxRounds bounds HOPS: with an odd budget the paired plain hops
+    // must fall back to a single hop instead of overshooting it.
+    val (_, cappedRounds) = graft.operators.ConnectedComponents
+      .run(edges, pointerJump = false, maxRounds = 5)
+    assert(cappedRounds <= 5,
+      s"maxRounds = 5 but the loop ran $cappedRounds hops")
   }
 
   /** JVM mirror of Dedup's md5-prefix token hash (same bits as Spark's
