@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
+import graft.operators.ConnectedComponents
 
 /** Deduplication operators over `documents` — exact, MinHash+LSH banding,
   * SimHash, n-gram Jaccard, duplicate clustering, canonical-doc
@@ -56,12 +57,6 @@ object Dedup {
     // functions.Simhash16 walks the hash array once; bit-identical
     // (StreamingSpec keeps pinning row-wise == d05's groupBy form).
     call_function("simhash16", tokHashes(text))
-
-  // The label-propagation loop and its iteration barrier live in
-  // operators/ConnectedComponents.scala since round 6 (pointer-jumping
-  // upgrade); d06 below is a thin wrapper over it.
-  private def barrier(df: DataFrame): DataFrame =
-    graft.operators.ConnectedComponents.barrier(df)
 
   /** Cross-document CHUNK-level dedup (paragraph dedup à la FineWeb's
     * line dedup, at t06's 50-token chunk grid): chunks are
@@ -632,7 +627,7 @@ object Dedup {
       // the converged labels (round-12: d25's leak audit probes pairs at
       // the same per-corpus-version grain as the labels — one mining
       // pass feeds both artifacts instead of each consumer re-mining).
-      val pairs = barrier(lshPairsFrom(lshSigDf(s, dir))
+      val pairs = ConnectedComponents.barrier(lshPairsFrom(lshSigDf(s, dir))
         .select(col("da"), col("db")))
       pairs.write.mode("overwrite")
         .parquet(new java.io.File(tmp, "pairs").getPath)
@@ -898,7 +893,7 @@ object Dedup {
       // graft.cc.checkpointDir is set); only one scalar sum reaches the
       // driver per round. Same fixpoint as the DuckDB recursive-CTE
       // oracle; DedupPropSpec pins jump-vs-plain round counts on a chain.
-      val pairs = barrier(lshPairsFrom(lshSigDf(s, dir))
+      val pairs = ConnectedComponents.barrier(lshPairsFrom(lshSigDf(s, dir))
         .select(col("da"), col("db")))
       val edges = pairs
         .unionByName(pairs.select(col("db").as("da"), col("da").as("db")))
@@ -1403,7 +1398,8 @@ object Dedup {
         .filter(col("rn") === 1).drop("rn")
         .persist(StorageLevel.MEMORY_AND_DISK) // feeds sig + label join + quota
       val sig = lshSigFrom(uniq)
-      val pairs = barrier(lshPairsFrom(sig).select(col("da"), col("db")))
+      val pairs = ConnectedComponents.barrier(
+        lshPairsFrom(sig).select(col("da"), col("db")))
       val edges = pairs
         .unionByName(pairs.select(col("db").as("da"), col("da").as("db")))
         .toDF("src", "dst")
@@ -1452,7 +1448,8 @@ object Dedup {
         .filter(col("rn") === 1).drop("rn")
         .persist(StorageLevel.MEMORY_AND_DISK)
       val sig = lshSigFrom(uniq)
-      val pairs = barrier(lshPairsFrom(sig).select(col("da"), col("db")))
+      val pairs = ConnectedComponents.barrier(
+        lshPairsFrom(sig).select(col("da"), col("db")))
       val edges = pairs
         .unionByName(pairs.select(col("db").as("da"), col("da").as("db")))
         .toDF("src", "dst")
@@ -1675,14 +1672,14 @@ object Dedup {
       // so the miner doesn't re-run per round; 3 bounded rounds, state
       // is one (node, rank) row per doc. The peak flag is one more
       // edge-join + struct-max groupBy.
-      val pairs = barrier(lshPairsFrom(lshSigDf(s, dir))
+      val pairs = ConnectedComponents.barrier(lshPairsFrom(lshSigDf(s, dir))
         .select(col("da"), col("db")))
       // Pre-partitioned on the per-round join key + barriered (the
       // round-16 ConnectedComponents.run rule): each PR round joins
       // edges on src — an un-partitioned edge list would re-shuffle
       // rounds × |edges| bytes; now it crosses the wire once, and the
       // deg aggregate + its per-round join reuse the same partitioning.
-      val edges = barrier(pairs
+      val edges = ConnectedComponents.barrier(pairs
         .unionByName(pairs.select(col("db").as("da"), col("da").as("db")))
         .toDF("src", "dst")
         .repartition(col("src")))
@@ -1733,7 +1730,7 @@ object Dedup {
       // force on adversarial star+clique graphs. The coefficient is
       // exact integer basis points:
       // cc_bp = (2·t·10⁴) div (deg·(deg−1)), 0 when deg < 2.
-      val pairs = barrier(lshPairsFrom(lshSigDf(s, dir))
+      val pairs = ConnectedComponents.barrier(lshPairsFrom(lshSigDf(s, dir))
         .select(col("da"), col("db")))
       triangleStats(pairs)
     },
@@ -2225,7 +2222,7 @@ object Dedup {
       // that 20-row frame (two 1-row broadcast aggs, the t22
       // bounded-frame rule — never a per-doc window), so the plan
       // costs one scan no matter the corpus size.
-      val src = barrier(Tables.load(s, dir, "documents")
+      val src = ConnectedComponents.barrier(Tables.load(s, dir, "documents")
         .select(col("source"),
           size(split(col("text"), " ")).cast("long").as("n_toks"))
         .groupBy(col("source"))
@@ -2565,14 +2562,14 @@ object Dedup {
       .distinct()
     // evalW feeds the per-doc window total AND the probe join — the
     // barrier stops the eval explode running twice.
-    val evalW = barrier(winHashSet(d.filter(isEval)))
+    val evalW = ConnectedComponents.barrier(winHashSet(d.filter(isEval)))
     val trainW = winHashSet(d.filter(!isEval))
       .withColumnRenamed("doc_id", "t_id")
     val nW = evalW.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_windows"))
     // hits feeds both aggregation grains — the barrier stops the
     // training-corpus explode running twice.
-    val hits = barrier(evalW.join(trainW, "h"))
+    val hits = ConnectedComponents.barrier(evalW.join(trainW, "h"))
     val sharedW = hits.select(col("doc_id"), col("h")).distinct()
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared_windows"))
     val sharedD = hits.select(col("doc_id"), col("t_id")).distinct()
@@ -3002,7 +2999,7 @@ object Dedup {
     // assigned is doc-grain and feeds four consumers (two policy
     // balance passes, the straddle audit, the pair leak join) — the
     // localCheckpoint stops each from re-running the label join.
-    val assigned = barrier(docs
+    val assigned = ConnectedComponents.barrier(docs
       .join(lab, col("doc_id") === col("cid"), "left_outer")
       .select(col("doc_id"), col("n_toks"),
         coalesce(col("cluster"), col("doc_id")).as("cluster"))

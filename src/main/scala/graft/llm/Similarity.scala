@@ -213,6 +213,28 @@ object Similarity {
       .filter(col("cid").isNotNull)
   }
 
+  /** The √N IVF sizing rule from a corpus row count: K = round(√n)
+    * cells, nProbe = max(1, round(K/4)) probed cells (~1/4 of the
+    * corpus per query). Always sized from N, never from the trained
+    * centroid count: a Lloyd round can empty a cell, and the DuckDB
+    * twins size from N (kSql/pSql). */
+  private[graft] def ivfSqrtN(n: Long): (Int, Int) = {
+    val k = math.round(math.sqrt(n.toDouble)).toInt
+    (k, math.max(1L, math.round(k / 4.0)).toInt)
+  }
+
+  /** Each query's `nProbe` nearest cells by exact integer L2, (dist,
+    * cid) ties: (q_id, qv) × codebook (cid, cv) → (q_id, qv, p_cell,
+    * cv). The K-row codebook broadcasts; the query side stays |Q|. */
+  private[graft] def ivfProbe(qv: DataFrame, cents: DataFrame,
+                              nProbe: Int): DataFrame = qv
+    .crossJoin(broadcast(cents))
+    .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
+    .withColumn("prn", row_number().over(
+      Window.partitionBy(col("q_id")).orderBy(col("dist"), col("cid"))))
+    .filter(col("prn") <= nProbe)
+    .select(col("q_id"), col("qv"), col("cid").as("p_cell"), col("cv"))
+
   /** Floor-mean centroid update re-projected onto the 1000-sphere
     * (spherical k-means; see v09's design note). */
   private def ivfUpdate(assigned: DataFrame): DataFrame =
@@ -333,8 +355,7 @@ object Similarity {
     IndexStore.ensureBuilt(base) { tmp =>
       val qvAll = ivfQv(Tables.load(s, dir, "embeddings"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      val n = qvAll.count()
-      val k = math.round(math.sqrt(n.toDouble)).toInt
+      val (k, _) = ivfSqrtN(qvAll.count())
       // Codebook trains on the bounded 256·K sample; the full corpus
       // is assigned ONCE below (the "cells" write) — via the two-level
       // route, ~2·N·√K distance evals instead of the flat N·K.
@@ -391,30 +412,16 @@ object Similarity {
     // and v17 size probes from N, so sizing from the survivor count
     // would silently diverge on any corpus that empties a cell. The
     // count is parquet-metadata-only (no data scan).
-    val nEmb = e.count()
-    val kSz = math.round(math.sqrt(nEmb.toDouble))
-    val nProbe = math.max(1L, math.round(kSz / 4.0)).toInt
-    val isQuery = col("vec_id") >= 100 && col("vec_id") < 120
-    val qe = e.filter(isQuery)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("cid"))
-    val probes = ivfQv(e.filter(isQuery))
-      .select(col("vec_id").as("q_id"), col("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-      .withColumn("prn", row_number().over(wp))
-      .filter(col("prn") <= nProbe)
-      .select(col("q_id"), col("cid").as("p_cell"))
-    val wr = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
-    probes.join(qe, "q_id")
+    val (_, nProbe) = ivfSqrtN(e.count())
+    val probes = ivfProbe(ivfQv(e.filter(RecallHarness.heldOut))
+      .select(col("vec_id").as("q_id"), col("qv")), cents, nProbe)
+    probes.join(RecallHarness.heldOutQueries(e), "q_id")
       .join(cells, col("p_cell") === col("c_cell") &&
         col("q_id") =!= col("c_id"))
       .join(e.select(col("vec_id").as("c_id"),
         col("embedding").as("c_emb")), "c_id")
       .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-      .withColumn("rnk", row_number().over(wr).cast("long"))
+      .withColumn("rnk", row_number().over(RecallHarness.bySim).cast("long"))
       .filter(col("rnk") <= k)
       .select(col("q_id"), col("c_id"), col("rnk"), col("sim"))
   }
@@ -441,8 +448,7 @@ object Similarity {
       val qvAll = ivfQv(Tables.load(s, dir, "embeddings"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       val baseQv = qvAll.filter(basePred)
-      val n = baseQv.count()
-      val k = math.round(math.sqrt(n.toDouble)).toInt
+      val (k, _) = ivfSqrtN(baseQv.count())
       ivfTrainSampled(baseQv, k, 3)
         .write.mode("overwrite")
         .parquet(new java.io.File(tmp, "cents").getPath)
@@ -550,23 +556,14 @@ object Similarity {
       .withColumn("seg", lit("base"))
       .unionByName(s.read.parquet(s"$idx/cells_delta")
         .withColumn("seg", lit("delta")))
-    val nBase = Tables.load(s, dir, "embeddings")
-      .filter(col("vec_id") % 7 =!= 0 && col("vec_id") % 7 =!= 3).count()
-    val kSz = math.round(math.sqrt(nBase.toDouble))
-    val nProbe = math.max(1L, math.round(kSz / 4.0)).toInt
+    val (_, nProbe) = ivfSqrtN(Tables.load(s, dir, "embeddings")
+      .filter(col("vec_id") % 7 =!= 0 && col("vec_id") % 7 =!= 3).count())
     val isProbe = col("vec_id") % 7 === 0
     val e = Tables.load(s, dir, "embeddings")
     val qe = e.filter(isProbe)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val wp = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("cid"))
-    val probes = ivfQv(e.filter(isProbe))
-      .select(col("vec_id").as("q_id"), col("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-      .withColumn("prn", row_number().over(wp))
-      .filter(col("prn") <= nProbe)
-      .select(col("q_id"), col("cid").as("p_cell"))
+    val probes = ivfProbe(ivfQv(e.filter(isProbe))
+      .select(col("vec_id").as("q_id"), col("qv")), cents, nProbe)
     // Top-1 as a struct-MIN AGGREGATE, not a row_number window (the
     // ivfAssign lesson at the serving grain — round 12, found at the
     // sf10 leg): this probe side is the BATCH (N/7 queries), so the
@@ -592,6 +589,56 @@ object Similarity {
         col("best.sim").as("ann_sim"), col("best.seg").as("ann_seg"))
   }
 
+  /** v19/v19b's serving body over a delta-chain index: probe each
+    * held-out query's nearest cells of `cents`, exact-cosine re-rank
+    * the probed members, keep the top 5 ((sim DESC, c_id) ties). K and
+    * nProbe size from the BASE row count (what the codebook was trained
+    * on), mirroring v18's N-derived sizing rule; the count is a
+    * pushed-filter scan of one int column. c_emb rides the cells
+    * artifact (round 12 — denormalized at build; see
+    * ensureAnnDeltaIndexWhere): the exact re-rank needs no per-candidate
+    * embedding re-attach join. Returns the probe and cells columns plus
+    * sim and rnk (≤ 5), unordered. */
+  private def deltaAnnTop5(s: SparkSession, dir: String, cents: DataFrame,
+                           cells: DataFrame): DataFrame = {
+    val e = Tables.load(s, dir, "embeddings")
+    val (_, nProbe) = ivfSqrtN(e.filter(col("vec_id") % 7 =!= 0).count())
+    ivfProbe(ivfQv(e.filter(RecallHarness.heldOut))
+        .select(col("vec_id").as("q_id"), col("qv")), cents, nProbe)
+      .join(RecallHarness.heldOutQueries(e), "q_id")
+      .join(cells, col("p_cell") === col("c_cell") &&
+        col("q_id") =!= col("c_id"))
+      .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
+      .withColumn("rnk", row_number().over(RecallHarness.bySim).cast("long"))
+      .filter(col("rnk") <= 5)
+  }
+
+  /** One v09/v17 IVF leg: assign the corpus to `cents`' cells, probe
+    * each held-out query's `nProbe` nearest cells, exact-cosine re-rank
+    * the probed members, and grade the top-5 against `truth`:
+    * (q_id, hits_sfx, n_cand_sfx, recall_sfx). */
+  private def ivfRecallLeg(e: DataFrame, qvAll: DataFrame,
+      truth: DataFrame, cents: DataFrame, nProbe: Int,
+      sfx: String): DataFrame = {
+    val cells = ivfAssign(qvAll, cents)
+      .select(col("vec_id").as("c_id"), col("cid").as("c_cell"))
+      .join(e.select(col("vec_id").as("c_id"),
+        col("embedding").as("c_emb")), "c_id")
+    val probes = ivfProbe(qvAll.filter(RecallHarness.heldOut)
+      .select(col("vec_id").as("q_id"), col("qv")), cents, nProbe)
+    val reranked = probes.join(RecallHarness.heldOutQueries(e), "q_id")
+      .join(cells,
+        col("p_cell") === col("c_cell") && col("q_id") =!= col("c_id"))
+      .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
+      .withColumn("rnk", row_number().over(RecallHarness.bySim))
+    val nCand = reranked.groupBy(col("q_id"))
+      .agg(count(lit(1)).as(s"n_cand_$sfx"))
+    RecallHarness.hits(truth, reranked.filter(col("rnk") <= 5),
+        s"hits_$sfx")
+      .join(nCand, "q_id")
+      .withColumn(s"recall_$sfx", RecallHarness.recall(col(s"hits_$sfx")))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "v19_delta_ann" -> { (s, dir) =>
       // DELTA-APPEND ANN serving — the v-family twin of d23's
@@ -613,36 +660,7 @@ object Similarity {
         .withColumn("seg", lit("base"))
         .unionByName(s.read.parquet(s"$idx/cells_delta")
           .withColumn("seg", lit("delta")))
-      val e = Tables.load(s, dir, "embeddings")
-      // K and nProbe size from the BASE row count (what the codebook
-      // was trained on), mirroring v18's N-derived sizing rule; the
-      // count is a pushed-filter scan of one int column.
-      val nBase = e.filter(col("vec_id") % 7 =!= 0).count()
-      val kSz = math.round(math.sqrt(nBase.toDouble))
-      val nProbe = math.max(1L, math.round(kSz / 4.0)).toInt
-      val isQuery = col("vec_id") >= 100 && col("vec_id") < 120
-      val qe = e.filter(isQuery)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wp = Window.partitionBy(col("q_id"))
-        .orderBy(col("dist"), col("cid"))
-      val probes = ivfQv(e.filter(isQuery))
-        .select(col("vec_id").as("q_id"), col("qv"))
-        .crossJoin(broadcast(cents))
-        .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-        .withColumn("prn", row_number().over(wp))
-        .filter(col("prn") <= nProbe)
-        .select(col("q_id"), col("cid").as("p_cell"))
-      val wr = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      // c_emb rides the cells artifact (round 12 — denormalized at
-      // build; see ensureAnnDeltaIndexWhere): the exact re-rank needs
-      // no per-candidate embedding re-attach join.
-      probes.join(qe, "q_id")
-        .join(cells, col("p_cell") === col("c_cell") &&
-          col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wr).cast("long"))
-        .filter(col("rnk") <= 5)
+      deltaAnnTop5(s, dir, cents, cells)
         .select(col("q_id"), col("c_id"), col("rnk"), col("sim"),
           col("seg"))
         .orderBy(col("q_id"), col("rnk"))
@@ -672,30 +690,7 @@ object Similarity {
         Seq(s"$idx/cells_base", s"$idx/cells_delta"))
       val cents = s.read.parquet(s"$cmp/cents")
       val cells = s.read.parquet(s"$cmp/cells")
-      val e = Tables.load(s, dir, "embeddings")
-      val nBase = e.filter(col("vec_id") % 7 =!= 0).count()
-      val kSz = math.round(math.sqrt(nBase.toDouble))
-      val nProbe = math.max(1L, math.round(kSz / 4.0)).toInt
-      val isQuery = col("vec_id") >= 100 && col("vec_id") < 120
-      val qe = e.filter(isQuery)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wp = Window.partitionBy(col("q_id"))
-        .orderBy(col("dist"), col("cid"))
-      val probes = ivfQv(e.filter(isQuery))
-        .select(col("vec_id").as("q_id"), col("qv"))
-        .crossJoin(broadcast(cents))
-        .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-        .withColumn("prn", row_number().over(wp))
-        .filter(col("prn") <= nProbe)
-        .select(col("q_id"), col("cid").as("p_cell"))
-      val wr = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      probes.join(qe, "q_id")
-        .join(cells, col("p_cell") === col("c_cell") &&
-          col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wr).cast("long"))
-        .filter(col("rnk") <= 5)
+      deltaAnnTop5(s, dir, cents, cells)
         .select(col("q_id"), col("c_id"), col("rnk"), col("sim"))
         .orderBy(col("q_id"), col("rnk"))
     },
@@ -719,20 +714,16 @@ object Similarity {
       val approx = queries("v19_delta_ann")(s, dir)
         .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
       val e = Tables.load(s, dir, "embeddings")
-      val isQuery = col("vec_id") >= 100 && col("vec_id") < 120
-      val q = e.filter(isQuery)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
       val c = e.select(col("vec_id").as("c_id"),
         col("embedding").as("c_emb"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
       // The 20-query slice is the BUILD side, explicitly: at test SF
       // the unfiltered corpus estimates smaller than the range-filtered
       // slice and Catalyst would broadcast the corpus — exactly the
       // side that grows 100× at scale.
-      val truth = broadcast(q).join(c, col("q_id") =!= col("c_id"))
+      val truth = broadcast(RecallHarness.heldOutQueries(e))
+        .join(c, col("q_id") =!= col("c_id"))
         .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(w))
+        .withColumn("rnk", row_number().over(RecallHarness.bySim))
         .filter(col("rnk") <= 5)
         .select(col("q_id"), col("c_id"),
           when(col("c_id") % 7 === 0, 1L).otherwise(0L).as("is_delta"))
@@ -742,7 +733,7 @@ object Similarity {
           sum(col("is_delta")).as("n_truth_delta"),
           sum(when(col("hit").isNotNull, col("is_delta"))
             .otherwise(0L)).as("hits_delta"))
-        .withColumn("recall", col("hits").cast("double") / 5.0)
+        .withColumn("recall", RecallHarness.recall(col("hits")))
         .orderBy(col("q_id"))
     },
 
@@ -823,17 +814,8 @@ object Similarity {
         // (ids, code) rows instead (pqEncode note).
         .persist(StorageLevel.MEMORY_AND_DISK)
       // Held-out queries: top-4 cells, per-cell residual distance table.
-      val isQ = col("vec_id") >= 100 && col("vec_id") < 120
-      val wp = Window.partitionBy(col("q_id"))
-        .orderBy(col("dist"), col("cid"))
-      val probes = qvAll.filter(isQ)
-        .select(col("vec_id").as("q_id"), col("qv"))
-        .crossJoin(broadcast(cents))
-        .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-        .withColumn("prn", row_number().over(wp))
-        .filter(col("prn") <= 4)
-        .select(col("q_id"), col("qv"), col("cid").as("p_cell"),
-          col("cv"))
+      val probes = ivfProbe(qvAll.filter(RecallHarness.heldOut)
+        .select(col("vec_id").as("q_id"), col("qv")), cents, 4)
       val qrsubs = probes
         .select(col("q_id"), col("p_cell"),
           zip_with(col("qv"), col("cv"), (x, c) => x - c).as("qr"))
@@ -852,42 +834,17 @@ object Similarity {
       val short = adc.withColumn("rn", row_number().over(wa))
         .filter(col("rn") <= PqShortlist)
       val top5 = short.filter(col("rn") <= 5)
-        .select(col("q_id"), col("vec_id").as("c_id"), lit(1L).as("hit"))
-      val qe = e.filter(isQ)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wt = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      val truth = qe
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wt))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"))
-        // Round 16: the exact-truth subtree (a |Q|x|N| broadcast NLJ of
-        // codegen cosines + a per-query window) feeds every leg/report
-        // branch — persist the ~|Q|*5 rows so it computes once.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val rr5 = short
         .select(col("q_id"), col("vec_id").as("c_id"))
-        .join(qe, "q_id")
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), "c_id")
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rrk", row_number().over(wt))
-        .filter(col("rrk") <= 5)
-        .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
+      val truth = RecallHarness.truth(e)
       val ncand = adc.groupBy(col("q_id"))
         .agg(count(lit(1)).as("n_cand"))
-      val hits = truth.join(top5, Seq("q_id", "c_id"), "left_outer")
-        .groupBy(col("q_id")).agg(count(col("hit")).as("hits_adc"))
-      val hitsRr = truth.join(rr5, Seq("q_id", "c_id"), "left_outer")
-        .groupBy(col("q_id")).agg(count(col("hit")).as("hits_rr"))
-      ncand.join(hits, "q_id").join(hitsRr, "q_id")
+      ncand.join(RecallHarness.hits(truth, top5, "hits_adc"), "q_id")
+        .join(RecallHarness.hits(truth, pqRerank(short, e), "hits_rr"),
+          "q_id")
         .select(col("q_id"), col("n_cand"), col("hits_adc"),
-          (col("hits_adc").cast("double") / 5.0).as("recall_adc"),
+          RecallHarness.recall(col("hits_adc")).as("recall_adc"),
           col("hits_rr"),
-          (col("hits_rr").cast("double") / 5.0).as("recall_rr"))
+          RecallHarness.recall(col("hits_rr")).as("recall_rr"))
         .orderBy(col("q_id"))
     },
 
@@ -1051,17 +1008,14 @@ object Similarity {
           .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
           .withColumn("rnk", row_number().over(w))
           .filter(col("rnk") <= 5)
-          .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
       val truth = queries("v01_knn_brute")(s, dir)
         .select(col("q_id"), col("c_id"))
-      def hits(a: DataFrame, n: String): DataFrame =
-        truth.join(a, Seq("q_id", "c_id"), "left_outer")
-          .groupBy(col("q_id")).agg(count(col("hit")).as(n))
-      hits(approx(col("bucket") === col("cb")), "hits_4bit")
-        .join(hits(approx(col("bucket2") === col("cb2")), "hits_2bit"),
-          "q_id")
-        .withColumn("recall_4bit", col("hits_4bit").cast("double") / 5.0)
-        .withColumn("recall_2bit", col("hits_2bit").cast("double") / 5.0)
+      RecallHarness.hits(truth, approx(col("bucket") === col("cb")),
+          "hits_4bit")
+        .join(RecallHarness.hits(truth,
+          approx(col("bucket2") === col("cb2")), "hits_2bit"), "q_id")
+        .withColumn("recall_4bit", RecallHarness.recall(col("hits_4bit")))
+        .withColumn("recall_2bit", RecallHarness.recall(col("hits_2bit")))
         .orderBy(col("q_id"))
     },
 
@@ -1114,14 +1068,11 @@ object Similarity {
         .withColumn("rnk", row_number().over(wr))
       val nCand = reranked.groupBy(col("q_id"))
         .agg(count(lit(1)).as("n_cand"))
-      val top5 = reranked.filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
       val truth = queries("v01_knn_brute")(s, dir)
         .select(col("q_id"), col("c_id"))
-      truth.join(top5, Seq("q_id", "c_id"), "left_outer")
-        .groupBy(col("q_id")).agg(count(col("hit")).as("hits_ivf"))
+      RecallHarness.hits(truth, reranked.filter(col("rnk") <= 5), "hits_ivf")
         .join(nCand, "q_id")
-        .withColumn("recall_ivf", col("hits_ivf").cast("double") / 5.0)
+        .withColumn("recall_ivf", RecallHarness.recall(col("hits_ivf")))
         .select(col("q_id"), col("n_cand"), col("hits_ivf"),
           col("recall_ivf"))
         .orderBy(col("q_id"))
@@ -1166,58 +1117,11 @@ object Similarity {
       val trained = ivfTrain(qvAll, ivfSeed(qvAll, 16), 2)
       val fixed = qvAll.filter(col("vec_id") < 16)
         .select(col("vec_id").as("cid"), col("qv").as("cv"))
-      // Held-out queries: disjoint from both codebooks' anchor/seed space.
-      val isQuery = col("vec_id") >= 100 && col("vec_id") < 120
-      val qe = e.filter(isQuery)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      // Exact top-5 ground truth for the held-out queries.
-      val wt = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      val truth = qe
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wt))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"))
-        // Round 16: the exact-truth subtree (a |Q|x|N| broadcast NLJ of
-        // codegen cosines + a per-query window) feeds every leg/report
-        // branch — persist the ~|Q|*5 rows so it computes once.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // One IVF leg = assign corpus to this codebook's cells, probe the
-      // query's top-4 cells, exact-cosine re-rank, score vs truth.
-      def leg(cents: DataFrame, sfx: String): DataFrame = {
-        val cells = ivfAssign(qvAll, cents)
-          .select(col("vec_id").as("c_id"), col("cid").as("c_cell"))
-          .join(e.select(col("vec_id").as("c_id"),
-            col("embedding").as("c_emb")), "c_id")
-        val wp = Window.partitionBy(col("q_id"))
-          .orderBy(col("dist"), col("cid"))
-        val probes = qvAll.filter(isQuery)
-          .select(col("vec_id").as("q_id"), col("qv"))
-          .crossJoin(broadcast(cents))
-          .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-          .withColumn("prn", row_number().over(wp))
-          .filter(col("prn") <= 4)
-          .select(col("q_id"), col("cid").as("p_cell"))
-        val wr = Window.partitionBy(col("q_id"))
-          .orderBy(col("sim").desc, col("c_id"))
-        val reranked = probes.join(qe, "q_id")
-          .join(cells,
-            col("p_cell") === col("c_cell") && col("q_id") =!= col("c_id"))
-          .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-          .withColumn("rnk", row_number().over(wr))
-        val nCand = reranked.groupBy(col("q_id"))
-          .agg(count(lit(1)).as(s"n_cand_$sfx"))
-        val top5 = reranked.filter(col("rnk") <= 5)
-          .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
-        truth.join(top5, Seq("q_id", "c_id"), "left_outer")
-          .groupBy(col("q_id")).agg(count(col("hit")).as(s"hits_$sfx"))
-          .join(nCand, "q_id")
-          .withColumn(s"recall_$sfx",
-            col(s"hits_$sfx").cast("double") / 5.0)
-      }
-      leg(fixed, "fx").join(leg(trained, "tr"), "q_id")
+      // Held-out queries (RecallHarness): disjoint from both codebooks'
+      // anchor/seed space, graded against their exact top-5.
+      val truth = RecallHarness.truth(e)
+      ivfRecallLeg(e, qvAll, truth, fixed, 4, "fx")
+        .join(ivfRecallLeg(e, qvAll, truth, trained, 4, "tr"), "q_id")
         .select(col("q_id"), col("n_cand_fx"), col("hits_fx"),
           col("recall_fx"), col("n_cand_tr"), col("hits_tr"),
           col("recall_tr"))
@@ -1248,59 +1152,12 @@ object Similarity {
       val e = Tables.load(s, dir, "embeddings")
       // Feeds the count, the training sample, final assigns + probes.
       val qvAll = ivfQv(e).persist(StorageLevel.MEMORY_AND_DISK)
-      val n = qvAll.count()
-      val kSq = math.round(math.sqrt(n.toDouble)).toInt
-      val probeSq = math.max(1L, math.round(kSq / 4.0)).toInt
+      val (kSq, probeSq) = ivfSqrtN(qvAll.count())
       val c16 = ivfTrain(qvAll, ivfSeed(qvAll, 16), 2)
       val csq = ivfTrainSampled(qvAll, kSq, 3)
-      val isQuery = col("vec_id") >= 100 && col("vec_id") < 120
-      val qe = e.filter(isQuery)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wt = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      val truth = qe
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wt))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"))
-        // Round 16: the exact-truth subtree (a |Q|x|N| broadcast NLJ of
-        // codegen cosines + a per-query window) feeds every leg/report
-        // branch — persist the ~|Q|*5 rows so it computes once.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      def leg(cents: DataFrame, nProbe: Int, sfx: String): DataFrame = {
-        val cells = ivfAssign(qvAll, cents)
-          .select(col("vec_id").as("c_id"), col("cid").as("c_cell"))
-          .join(e.select(col("vec_id").as("c_id"),
-            col("embedding").as("c_emb")), "c_id")
-        val wp = Window.partitionBy(col("q_id"))
-          .orderBy(col("dist"), col("cid"))
-        val probes = qvAll.filter(isQuery)
-          .select(col("vec_id").as("q_id"), col("qv"))
-          .crossJoin(broadcast(cents))
-          .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
-          .withColumn("prn", row_number().over(wp))
-          .filter(col("prn") <= nProbe)
-          .select(col("q_id"), col("cid").as("p_cell"))
-        val wr = Window.partitionBy(col("q_id"))
-          .orderBy(col("sim").desc, col("c_id"))
-        val reranked = probes.join(qe, "q_id")
-          .join(cells,
-            col("p_cell") === col("c_cell") && col("q_id") =!= col("c_id"))
-          .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-          .withColumn("rnk", row_number().over(wr))
-        val nCand = reranked.groupBy(col("q_id"))
-          .agg(count(lit(1)).as(s"n_cand_$sfx"))
-        val top5 = reranked.filter(col("rnk") <= 5)
-          .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
-        truth.join(top5, Seq("q_id", "c_id"), "left_outer")
-          .groupBy(col("q_id")).agg(count(col("hit")).as(s"hits_$sfx"))
-          .join(nCand, "q_id")
-          .withColumn(s"recall_$sfx",
-            col(s"hits_$sfx").cast("double") / 5.0)
-      }
-      leg(c16, 4, "16").join(leg(csq, probeSq, "sq"), "q_id")
+      val truth = RecallHarness.truth(e)
+      ivfRecallLeg(e, qvAll, truth, c16, 4, "16")
+        .join(ivfRecallLeg(e, qvAll, truth, csq, probeSq, "sq"), "q_id")
         .select(col("q_id"), col("n_cand_16"), col("hits_16"),
           col("recall_16"), col("n_cand_sq"), col("hits_sq"),
           col("recall_sq"))
@@ -1353,64 +1210,22 @@ object Similarity {
       // integer ADC mass of the chosen 5 (adds hash signal beyond the
       // hit count).
       val (_, subs, cb, codes) = pqEncode(s, dir)
-      val isQ = col("vec_id") >= 100 && col("vec_id") < 120
-      val qsubs = subs.filter(isQ)
-        .select(col("vec_id").as("q_id"), col("m"), col("sub").as("qsub"))
-      val dtab = qsubs.join(broadcast(cb), "m")
-        .select(col("q_id"), col("m"), col("code"),
-          intSqDist(col("qsub"), col("cv")).as("d"))
-      val adc = codes.join(broadcast(dtab), Seq("m", "code"))
-        .filter(col("q_id") =!= col("vec_id"))
-        .groupBy(col("q_id"), col("vec_id"))
-        .agg(sum(col("d")).as("adc_dist"))
-      val wa = Window.partitionBy(col("q_id"))
-        .orderBy(col("adc_dist"), col("vec_id"))
-      val short = adc.withColumn("rn", row_number().over(wa))
+      val short = pqAdcRanked(subs, cb, codes)
         .filter(col("rn") <= PqShortlist)
       val top5 = short.filter(col("rn") <= 5)
       val e = Tables.load(s, dir, "embeddings")
-      val qe = e.filter(isQ)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wt = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      val truth = qe
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wt))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"))
-        // Round 16: the exact-truth subtree (a |Q|x|N| broadcast NLJ of
-        // codegen cosines + a per-query window) feeds every leg/report
-        // branch — persist the ~|Q|*5 rows so it computes once.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // Exact-cosine re-rank of the ADC shortlist — the second half of
-      // the production PQ pipeline: the code scan prunes the corpus to
-      // PqShortlist rows per query, and only those touch float payloads.
-      val rr5 = short
-        .select(col("q_id"), col("vec_id").as("c_id"))
-        .join(qe, "q_id")
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), "c_id")
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rrk", row_number().over(wt))
-        .filter(col("rrk") <= 5)
-        .select(col("q_id"), col("c_id"))
-      val hits = truth
-        .join(top5.select(col("q_id"), col("vec_id").as("c_id"),
-          lit(1L).as("hit")), Seq("q_id", "c_id"), "left_outer")
-        .groupBy(col("q_id")).agg(count(col("hit")).as("hits_adc"))
-      val hitsRr = truth
-        .join(rr5.withColumn("hit", lit(1L)),
-          Seq("q_id", "c_id"), "left_outer")
-        .groupBy(col("q_id")).agg(count(col("hit")).as("hits_rr"))
+      val truth = RecallHarness.truth(e)
       val adcsum = top5.groupBy(col("q_id"))
         .agg(sum(col("adc_dist")).as("adc_top5"))
-      hits.join(hitsRr, "q_id").join(adcsum, "q_id")
+      RecallHarness.hits(truth,
+          top5.select(col("q_id"), col("vec_id").as("c_id")), "hits_adc")
+        .join(RecallHarness.hits(truth, pqRerank(short, e), "hits_rr"),
+          "q_id")
+        .join(adcsum, "q_id")
         .select(col("q_id"), col("hits_adc"),
-          (col("hits_adc").cast("double") / 5.0).as("recall_adc"),
+          RecallHarness.recall(col("hits_adc")).as("recall_adc"),
           col("hits_rr"),
-          (col("hits_rr").cast("double") / 5.0).as("recall_rr"),
+          RecallHarness.recall(col("hits_rr")).as("recall_rr"),
           col("adc_top5"))
         .orderBy(col("q_id"))
     },
@@ -1437,14 +1252,13 @@ object Similarity {
       // equi-join as v11 — 4 table lookups + adds per stored code,
       // no float payloads, embarrassingly parallel.
       val (_, subs, cb, codes) = pqEncode(s, dir)
-      val isQ = col("vec_id") >= 100 && col("vec_id") < 120
       val sdcTab = cb.join(
           cb.select(col("m").as("mb"), col("code").as("code_b"),
             col("cv").as("cvb")),
           col("m") === col("mb"))
         .select(col("m"), col("code").as("code_a"), col("code_b"),
           intSqDist(col("cv"), col("cvb")).as("d"))
-      val qcodes = codes.filter(isQ)
+      val qcodes = codes.filter(RecallHarness.heldOut)
         .select(col("vec_id").as("q_id"), col("m"),
           col("code").as("code_a"))
       val qtab = qcodes.join(broadcast(sdcTab), Seq("m", "code_a"))
@@ -1459,50 +1273,19 @@ object Similarity {
       val top5s = sdc.withColumn("rn", row_number().over(ws))
         .filter(col("rn") <= 5)
       // ADC on the same artifacts (v11's table) for the side-by-side.
-      val qsubs = subs.filter(isQ)
-        .select(col("vec_id").as("q_id"), col("m"), col("sub").as("qsub"))
-      val dtab = qsubs.join(broadcast(cb), "m")
-        .select(col("q_id"), col("m"), col("code"),
-          intSqDist(col("qsub"), col("cv")).as("d"))
-      val adc = codes.join(broadcast(dtab), Seq("m", "code"))
-        .filter(col("q_id") =!= col("vec_id"))
-        .groupBy(col("q_id"), col("vec_id"))
-        .agg(sum(col("d")).as("adc_dist"))
-      val wa = Window.partitionBy(col("q_id"))
-        .orderBy(col("adc_dist"), col("vec_id"))
-      val top5a = adc.withColumn("rn", row_number().over(wa))
-        .filter(col("rn") <= 5)
-      val e = Tables.load(s, dir, "embeddings")
-      val qe = e.filter(isQ)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wt = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      val truth = qe
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wt))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"))
-        // Round 16: the exact-truth subtree (a |Q|x|N| broadcast NLJ of
-        // codegen cosines + a per-query window) feeds every leg/report
-        // branch — persist the ~|Q|*5 rows so it computes once.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val hitsS = truth
-        .join(top5s.select(col("q_id"), col("vec_id").as("c_id"),
-          lit(1L).as("hit")), Seq("q_id", "c_id"), "left_outer")
-        .groupBy(col("q_id")).agg(count(col("hit")).as("hits_sdc"))
-      val hitsA = truth
-        .join(top5a.select(col("q_id"), col("vec_id").as("c_id"),
-          lit(1L).as("hit")), Seq("q_id", "c_id"), "left_outer")
-        .groupBy(col("q_id")).agg(count(col("hit")).as("hits_adc"))
+      val top5a = pqAdcRanked(subs, cb, codes).filter(col("rn") <= 5)
+      val truth = RecallHarness.truth(Tables.load(s, dir, "embeddings"))
+      def asCand(top5: DataFrame): DataFrame =
+        top5.select(col("q_id"), col("vec_id").as("c_id"))
       val sdcsum = top5s.groupBy(col("q_id"))
         .agg(sum(col("sdc_dist")).as("sdc_top5"))
-      hitsS.join(hitsA, "q_id").join(sdcsum, "q_id")
+      RecallHarness.hits(truth, asCand(top5s), "hits_sdc")
+        .join(RecallHarness.hits(truth, asCand(top5a), "hits_adc"), "q_id")
+        .join(sdcsum, "q_id")
         .select(col("q_id"), col("hits_sdc"),
-          (col("hits_sdc").cast("double") / 5.0).as("recall_sdc"),
+          RecallHarness.recall(col("hits_sdc")).as("recall_sdc"),
           col("hits_adc"),
-          (col("hits_adc").cast("double") / 5.0).as("recall_adc"),
+          RecallHarness.recall(col("hits_adc")).as("recall_adc"),
           col("sdc_top5"))
         .orderBy(col("q_id"))
     },
@@ -1640,8 +1423,7 @@ object Similarity {
       // every step; the corpus never shuffles.
       val e = Tables.load(s, dir, "embeddings")
       val qvAll = ivfQv(e).persist(StorageLevel.MEMORY_AND_DISK)
-      val n = qvAll.count()
-      val kSq = math.round(math.sqrt(n.toDouble)).toInt
+      val (kSq, _) = ivfSqrtN(qvAll.count())
       val cents = ivfTrainSampled(qvAll, kSq, 3) // the v17/v18 codebook
       // Round 15: the route itself is the shared [[twoLevelAssign]] —
       // the exact code path every index build now assigns through — so
@@ -2041,54 +1823,37 @@ object Similarity {
       val e = Tables.load(s, dir, "embeddings")
       val qvAll = ivfQv(e).persist(StorageLevel.MEMORY_AND_DISK)
       val cents = ivfTrain(qvAll, ivfSeed(qvAll, 16), 2)
-      val isQuery = col("vec_id") >= 100 && col("vec_id") < 120
-      val qe = e.filter(isQuery)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val wt = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("c_id"))
-      val truth = qe
-        .join(e.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_emb")), col("q_id") =!= col("c_id"))
-        .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
-        .withColumn("rnk", row_number().over(wt))
-        .filter(col("rnk") <= 5)
-        .select(col("q_id"), col("c_id"))
-        // Round 16: the exact-truth subtree (a |Q|x|N| broadcast NLJ of
-        // codegen cosines + a per-query window) feeds every leg/report
-        // branch — persist the ~|Q|*5 rows so it computes once.
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val truth = RecallHarness.truth(e)
       val cells = ivfAssign(qvAll, cents)
         .select(col("vec_id").as("c_id"), col("cid").as("c_cell"))
         .join(e.select(col("vec_id").as("c_id"),
           col("embedding").as("c_emb")), "c_id")
       val wp = Window.partitionBy(col("q_id"))
         .orderBy(col("dist"), col("cid"))
-      val probes = qvAll.filter(isQuery)
+      // Own probe (not ivfProbe): the sweep filters and reports prn, so
+      // it carries the rank as a long.
+      val probes = qvAll.filter(RecallHarness.heldOut)
         .select(col("vec_id").as("q_id"), col("qv"))
         .crossJoin(broadcast(cents))
         .withColumn("dist", ivfIntDist(col("qv"), col("cv")))
         .withColumn("prn", row_number().over(wp).cast("long"))
         .filter(col("prn") <= 8)
         .select(col("q_id"), col("cid").as("p_cell"), col("prn"))
-      val cand = probes.join(qe, "q_id")
+      val cand = probes.join(RecallHarness.heldOutQueries(e), "q_id")
         .join(cells,
           col("p_cell") === col("c_cell") && col("q_id") =!= col("c_id"))
         .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
         .select(col("q_id"), col("c_id"), col("prn"), col("sim"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       def leg(p: Int): DataFrame = {
-        val wr = Window.partitionBy(col("q_id"))
-          .orderBy(col("sim").desc, col("c_id"))
         val in = cand.filter(col("prn") <= p)
         val nCand = in.groupBy(col("q_id"))
           .agg(count(lit(1)).as(s"n_cand_p$p"))
-        val top5 = in.withColumn("rnk", row_number().over(wr))
+        val top5 = in.withColumn("rnk", row_number().over(RecallHarness.bySim))
           .filter(col("rnk") <= 5)
-          .select(col("q_id"), col("c_id"), lit(1L).as("hit"))
-        truth.join(top5, Seq("q_id", "c_id"), "left_outer")
-          .groupBy(col("q_id")).agg(count(col("hit")).as(s"hits_p$p"))
+        RecallHarness.hits(truth, top5, s"hits_p$p")
           .join(nCand, "q_id")
-          .withColumn(s"recall_p$p", col(s"hits_p$p").cast("double") / 5.0)
+          .withColumn(s"recall_p$p", RecallHarness.recall(col(s"hits_p$p")))
       }
       Seq(2, 4, 8).map(leg).foldLeft(leg(1))((a, b) => a.join(b, "q_id"))
         .select(col("q_id"),
@@ -2189,6 +1954,40 @@ object Similarity {
     * round-16 IntL2Dist contract), so every DuckDB twin is unchanged. */
   private def intSqDist(a: Column, b: Column): Column =
     call_function("int_l2", a, b)
+
+  /** v11/v24's PQ asymmetric-distance scan: each held-out query's M×K
+    * distance table (640 rows — broadcast) scores every stored code by
+    * M lookups + adds, ranked per query by (adc_dist, vec_id):
+    * (q_id, vec_id, adc_dist, rn). */
+  private def pqAdcRanked(subs: DataFrame, cb: DataFrame,
+                          codes: DataFrame): DataFrame = {
+    val dtab = subs.filter(RecallHarness.heldOut)
+      .select(col("vec_id").as("q_id"), col("m"), col("sub").as("qsub"))
+      .join(broadcast(cb), "m")
+      .select(col("q_id"), col("m"), col("code"),
+        intSqDist(col("qsub"), col("cv")).as("d"))
+    val wa = Window.partitionBy(col("q_id"))
+      .orderBy(col("adc_dist"), col("vec_id"))
+    codes.join(broadcast(dtab), Seq("m", "code"))
+      .filter(col("q_id") =!= col("vec_id"))
+      .groupBy(col("q_id"), col("vec_id"))
+      .agg(sum(col("d")).as("adc_dist"))
+      .withColumn("rn", row_number().over(wa))
+  }
+
+  /** Exact-cosine re-rank of a PQ shortlist (q_id, vec_id) to its top
+    * 5 (q_id, c_id) — the second half of the production PQ pipeline:
+    * the code scan prunes the corpus to the shortlist, and only those
+    * rows touch float payloads. */
+  private def pqRerank(short: DataFrame, e: DataFrame): DataFrame = short
+    .select(col("q_id"), col("vec_id").as("c_id"))
+    .join(RecallHarness.heldOutQueries(e), "q_id")
+    .join(e.select(col("vec_id").as("c_id"),
+      col("embedding").as("c_emb")), "c_id")
+    .withColumn("sim", expr("cosine_sim(q_emb, c_emb)"))
+    .withColumn("rrk", row_number().over(RecallHarness.bySim))
+    .filter(col("rrk") <= 5)
+    .select(col("q_id"), col("c_id"))
 
   /** L2-normalized int64-quantized vectors — v09's integer scheme
     * (round(x/||x||*1000)): exact enough to rank, deterministic enough

@@ -36,33 +36,25 @@ object ConnectedComponents {
     * switches every round's labels to a reliable `checkpoint`: one
     * distributed write per round buys executor-churn tolerance — the
     * 100 TB-correct configuration for a long CC job.
+    *
+    * `eager = false` (round 17) truncates lineage the same way but
+    * leaves materialization to the round's OWN convergence aggregate
+    * instead of an extra eager pass — one job per round instead of two
+    * (the per-round label-sum action computes and persists the
+    * checkpoint blocks as it runs). Only safe where exactly one action
+    * follows before the next consumer: the jump rounds keep the EAGER
+    * barrier because the path-halving self-join reads the frame on
+    * both sides.
     */
-  private[graft] def barrier(df: DataFrame): DataFrame =
+  private[graft] def barrier(df: DataFrame,
+                             eager: Boolean = true): DataFrame =
     df.sparkSession.conf.getOption("graft.cc.checkpointDir")
       .filter(_.nonEmpty) match {
       case Some(d) =>
         val sc = df.sparkSession.sparkContext
         if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-        df.checkpoint()
-      case None => df.localCheckpoint()
-    }
-
-  /** LAZY variant of [[barrier]] for the propagation loop (round 17):
-    * lineage is truncated the same way, but materialization is left to
-    * the round's OWN convergence aggregate instead of an extra eager
-    * pass — one job per round instead of two (the per-round `sum(lbl)`
-    * action computes and persists the checkpoint blocks as it runs).
-    * Only safe where exactly one action follows before the next
-    * consumer: the jump rounds keep the EAGER barrier because the
-    * path-halving self-join reads the frame on both sides. */
-  private def lazyBarrier(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption("graft.cc.checkpointDir")
-      .filter(_.nonEmpty) match {
-      case Some(d) =>
-        val sc = df.sparkSession.sparkContext
-        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d)
-        df.checkpoint(eager = false)
-      case None => df.localCheckpoint(eager = false)
+        df.checkpoint(eager)
+      case None => df.localCheckpoint(eager)
     }
 
   /** Run CC over a SYMMETRIC edge list (`src`, `dst` — both directions
@@ -102,13 +94,19 @@ object ConnectedComponents {
     // localCheckpoint was a full extra pass over the round's blocks).
     // The first consumer of `edges`/`lab` is the init `prevSum` action,
     // which computes and persists both in one job.
-    val edges = lazyBarrier(edgesIn.repartition(col("src")))
+    val edges = barrier(edgesIn.repartition(col("src")), eager = false)
     val nodes = edges.select(col("src").as("id")).distinct()
-    var lab = lazyBarrier(nodes.withColumn("lbl", col("id")))
-    // coalesce: an EMPTY edge set (a corpus with no near-dup pairs at
-    // all) must converge to empty labels, not NULL-crash the scalar.
-    var prevSum = lab.agg(coalesce(sum(col("lbl")), lit(0L)))
-      .head().getLong(0)
+    var lab = barrier(nodes.withColumn("lbl", col("id")), eager = false)
+    // The convergence scalar sums labels as DECIMAL(38,0): a Long sum
+    // throws ARITHMETIC_OVERFLOW under ANSI once the labels add past
+    // 2^63 (three ids near 4e18 are enough), and the exact decimal
+    // keeps the unchanged-sum fixpoint test exact. coalesce: an EMPTY
+    // edge set (a corpus with no near-dup pairs at all) must converge
+    // to empty labels, not NULL-crash the scalar.
+    def labelSum(l: DataFrame): java.math.BigDecimal =
+      l.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")), lit(0)))
+        .head().getDecimal(0)
+    var prevSum = labelSum(lab)
     var converged = false
     var rounds = 0
     def hop(l: DataFrame): DataFrame = {
@@ -119,7 +117,7 @@ object ConnectedComponents {
     }
     while (!converged && rounds < maxRounds) {
       if (pointerJump && rounds >= jumpAfter) {
-        val stepped = lazyBarrier(hop(lab))
+        val stepped = barrier(hop(lab), eager = false)
         // Path halving: follow the label pointer one more hop. The jump
         // round keeps the EAGER barrier: the self-join reads `stepped`
         // on both sides, so it must be materialized first (two
@@ -129,8 +127,9 @@ object ConnectedComponents {
         // the equi-join never drops a row.
         val s2 = barrier(stepped)
         val l2 = s2.select(col("id").as("jid"), col("lbl").as("jlbl"))
-        lab = lazyBarrier(s2.join(l2, col("lbl") === col("jid"))
-          .select(col("id"), least(col("lbl"), col("jlbl")).as("lbl")))
+        lab = barrier(s2.join(l2, col("lbl") === col("jid"))
+          .select(col("id"), least(col("lbl"), col("jlbl")).as("lbl")),
+          eager = false)
         rounds += 1
       } else {
         // Round 17 (guide §5 — the driver serializes the loop): TWO
@@ -148,12 +147,11 @@ object ConnectedComponents {
         // frame's two consumers (union left + join right) share one
         // exchange subtree, so the inner hop's shuffle is written once.
         val pair = rounds + 2 <= maxRounds
-        lab = lazyBarrier(if (pair) hop(hop(lab)) else hop(lab))
+        lab = barrier(if (pair) hop(hop(lab)) else hop(lab), eager = false)
         rounds += (if (pair) 2 else 1)
       }
-      val curSum = lab.agg(coalesce(sum(col("lbl")), lit(0L)))
-        .head().getLong(0)
-      converged = curSum == prevSum
+      val curSum = labelSum(lab)
+      converged = curSum.compareTo(prevSum) == 0
       prevSum = curSum
     }
     (lab, rounds)

@@ -304,6 +304,56 @@ class DedupPropSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"maxRounds = 5 but the loop ran $cappedRounds hops")
   }
 
+  /** In-memory union-find reference for CC: every node's label is the
+    * min id of its component (a merge always points the larger root at
+    * the smaller, so each root is its set's minimum). */
+  private def unionFindLabels(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  test("CC labels equal an in-memory union-find's min ids, with and " +
+    "without pointer jumping, on random graphs with ids near 4e18") {
+    val s = spark
+    import s.implicits._
+    for (seed <- 1 to 3) {
+      val rnd = new scala.util.Random(seed)
+      // One 12-node path over ids near 4e18: its labels alone sum past
+      // 2^63 (the ANSI Long-overflow case), and its diameter carries the
+      // loop past jumpAfter into the path-halving rounds. The rest are
+      // random trees plus one chord each over small distinct ids.
+      val big = rnd.shuffle((0 until 12).map(i => 4000000000000000000L +
+        i * 7919L))
+      val small = rnd.shuffle((0L until 1000L).toVector).take(30)
+      val comps = Iterator.unfold(small) { rest =>
+        if (rest.isEmpty) None
+        else Some(rest.splitAt(2 + rnd.nextInt(7)))
+      }.toSeq.filter(_.size >= 2)
+      val edges = big.sliding(2).map(p => (p(0), p(1))).toSeq ++
+        comps.flatMap { c =>
+          (1 until c.size).map(i => (c(i), c(rnd.nextInt(i)))) :+
+            ((c(rnd.nextInt(c.size)), c(rnd.nextInt(c.size))))
+        }.filter { case (a, b) => a != b }
+      val want = unionFindLabels(edges)
+      val df = (edges ++ edges.map(_.swap)).toDF("src", "dst")
+      for (jump <- Seq(true, false)) {
+        val (lab, _) = graft.operators.ConnectedComponents
+          .run(df, pointerJump = jump)
+        val got = lab.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == want, s"seed $seed, pointerJump = $jump: CC labels " +
+          s"differ from union-find (${got.size} vs ${want.size} nodes)")
+      }
+    }
+  }
+
   /** JVM mirror of Dedup's md5-prefix token hash (same bits as Spark's
     * conv(substring(md5(t),1,15),16,10) % P and DuckDB's twin). */
   private def tokHashJvm(t: String): Long = {

@@ -236,6 +236,28 @@ class SimilaritySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.count() == 20, "one graded row per held-out query")
   }
 
+  test("recall harness reports: v26 hits and n_cand are non-decreasing " +
+    "in nProbe; every hits_* is in [0, 5] with recall_* = hits_* / 5") {
+    def rows(q: String) = graft.llm.Similarity.queries(q)(spark, sf).collect()
+    val v26 = rows("v26_nprobe_sweep")
+    val probes = Seq(1, 2, 4, 8)
+    for (r <- v26; c <- Seq("hits_p", "n_cand_p")) {
+      val xs = probes.map(p => r.getAs[Long](s"$c$p"))
+      assert(xs == xs.sorted,
+        s"v26 q_id ${r.get(0)}: $c* not non-decreasing in nProbe: $xs")
+    }
+    for ((q, rs) <- Seq("v09_ivf_trained" -> rows("v09_ivf_trained"),
+      "v17_ivf_sqrtn" -> rows("v17_ivf_sqrtn"), "v26_nprobe_sweep" -> v26)) {
+      assert(rs.length == 20, s"$q: one graded row per held-out query")
+      for (r <- rs; h <- r.schema.fieldNames.filter(_.startsWith("hits_"))) {
+        val n = r.getAs[Long](h)
+        val rc = r.getAs[Double]("recall_" + h.stripPrefix("hits_"))
+        assert(n >= 0 && n <= 5, s"$q q_id ${r.get(0)}: $h = $n")
+        assert(rc == n / 5.0, s"$q q_id ${r.get(0)}: recall $rc vs $h = $n")
+      }
+    }
+  }
+
   test("v21 Hamming shortlist + re-rank equals an in-memory brute force " +
     "over the codegen signatures") {
     // Recomputes the whole pipeline in memory from the SAME hyperplane
